@@ -26,11 +26,16 @@ object Bench {
     } catch { case _: Throwable => (-1.0, -1.0, -1.0) }
 
   /** An official (re-baselinable) record requires a quiet host at START:
-    * 1-min load below this on the 32-core box (the bench itself drives the
-    * END load, so only the start value is diagnostic). Records over the
+    * 1-min load below half the host's processors, the same rule as the
+    * repository benchmark's `quiet` flag (the bench itself drives the END
+    * load, so only the start value is diagnostic). Records over the
     * threshold are emitted with "load_ok":false — BASELINE.md's rule is
-    * that such a record must not re-baseline and must be re-taken idle. */
-  val MaxStartLoad1m = 4.0
+    * that such a record must not re-baseline and must be re-taken idle.
+    * A negative load (no /proc/loadavg) passes. */
+  def maxStartLoad1m(nproc: Int): Double = nproc / 2.0
+
+  def loadOk(load1m: Double, nproc: Int): Boolean =
+    load1m < 0 || load1m < maxStartLoad1m(nproc)
 
   /** Aggregate jiffies (user…steal) from /proc/stat line 1, or null
     * off-Linux. Loadavg only sees THIS guest's runnable queue; on a
@@ -264,16 +269,18 @@ object Bench {
       .mkString("{", ",", "}")
     val laEnd = loadAvg()
     val (steal, busy) = cpuDelta(jfStart, cpuJiffies())
-    val loadOk = laStart._1 < 0 || laStart._1 < MaxStartLoad1m
+    val nproc = Runtime.getRuntime.availableProcessors
+    val maxLoad = maxStartLoad1m(nproc)
+    val loadOk = Bench.loadOk(laStart._1, nproc)
     def laJson(la: (Double, Double, Double)) =
       s"[${d3(la._1)},${d3(la._2)},${d3(la._3)}]"
     val loadJson =
       s""""loadavg_start":${laJson(laStart)},"loadavg_end":${laJson(laEnd)},""" +
         s""""steal_pct":${d3(steal)},"busy_pct":${d3(busy)},""" +
-        s""""load_ok":$loadOk,"load_rule":"official record requires start 1-min load < $MaxStartLoad1m; steal_pct is the hypervisor tax over the whole run\""""
+        s""""load_ok":$loadOk,"load_rule":"official record requires start 1-min load < nproc/2 = ${d3(maxLoad)}; steal_pct is the hypervisor tax over the whole run\""""
     if (!loadOk)
       Console.err.println(s"[bench] WARNING: start loadavg ${laStart._1} >= " +
-        s"$MaxStartLoad1m — NOT an official record (load_ok=false); re-run idle")
+        s"${d3(maxLoad)} (nproc/2) — NOT an official record (load_ok=false); re-run idle")
 
     // FULL artifact (full names, full precision, median + min + raw rounds)
     // → a file, because the round driver retains only the last ~2000 chars

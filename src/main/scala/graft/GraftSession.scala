@@ -43,7 +43,12 @@ object GraftSession {
 
   /** Local session sized from SPARK_GRAFT_CPUS (driver harness contract). */
   def local(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    build(s"local[$cpus]", cpus.toInt)
+    val cpus = localCpus(sys.env)
+    build(s"local[$cpus]", cpus)
   }
+
+  /** SPARK_GRAFT_CPUS when set, else the host's processor count. */
+  private[graft] def localCpus(env: Map[String, String]): Int =
+    env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
 }

@@ -9,6 +9,8 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import scala.jdk.CollectionConverters._
+
 /** Read-option surface for snapshot time travel — reaches
   * [[ParquetDatabase.readSnapshot]] semantics WITHOUT the Scala API:
   *
@@ -24,7 +26,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * archive) and delegates to Spark's own V2 [[ParquetTable]] over exactly
   * those files — so the scan is the stock vectorized parquet reader with
   * full filter pushdown, column pruning, and row-group skipping; nothing
-  * is re-implemented. `mergeSchema` defaults on, matching `read()`.
+  * is re-implemented. The schema is `read()`'s: a flat snapshot's is merged
+  * from the pinned files' footers and handed to the table, so resolving it
+  * runs no job; partitioned snapshots, and option sets that change which
+  * files are read or how the schema is inferred, keep Spark's `mergeSchema`
+  * inference (on by default).
   *
   * Partition-column recovery needs one shared `basePath`, so a snapshot of
   * a hive-PARTITIONED table whose pinned files span live + archive cannot
@@ -61,10 +67,13 @@ class GraftSnapshotSource extends TableProvider with DataSourceRegister {
       archRels.map(r => s"${db.archiveRoot}/$r")
     val opts = new java.util.HashMap[String, String](options.asCaseSensitiveMap())
     opts.remove("path"); opts.remove("snapshot")
+    val schema =
+      if (partitioned) None
+      else db.footerSchema(files, opts.asScala.toMap ++ base.map("basePath" -> _))
     opts.putIfAbsent("mergeSchema", "true")
     base.foreach(b => opts.put("basePath", b))
     ParquetTable(s"graft-snapshot $dir@$tag", spark,
-      new CaseInsensitiveStringMap(opts), files, None, classOf[ParquetFileFormat])
+      new CaseInsensitiveStringMap(opts), files, schema, classOf[ParquetFileFormat])
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =

@@ -2,10 +2,15 @@ package graft.sources
 
 import graft.schema.SchemaOps
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelationWithTable}
+import org.apache.spark.sql.execution.datasources.parquet.{GraftSchemaBridge, ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** Directory-rooted parquet table facade — the ParquetDB API surface the
   * reference delegates to (SURVEY.md §2.2 P1–P8; `ParquetDB(dir)`,
@@ -251,8 +256,13 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
   }
 
   /** Projected / filtered read (ParquetDB `read`, base.py:188-193).
-    * `mergeSchema` reproduces the permissive union across appended batches
-    * with evolved schemas; nested structs need no rebuild (parquet native).
+    * The schema is the permissive union across appended batches with
+    * evolved schemas (Spark's `mergeSchema` result, field for field); nested
+    * structs need no rebuild (parquet native). On a flat table it is merged
+    * on the driver from footers this instance caches per file, so the read
+    * runs no schema job ([[scan]]); hive-partitioned layouts and reads whose
+    * `options` change which files are read or how the schema is inferred
+    * keep Spark's own `mergeSchema` inference.
     *
     * @param options per-read tuning (the reference's per-call `LoadConfig`,
     *                base.py:224,239 — batch sizing etc.): Spark parquet
@@ -266,9 +276,7 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     */
   def read(columns: Seq[String] = Nil, filter: Option[Column] = None,
            options: Map[String, String] = Map.empty): DataFrame = {
-    val base = spark.read
-      .options(Map("mergeSchema" -> "true") ++ options)
-      .parquet(dir)
+    val base = scan(Seq(dir), options)
     val filtered = filter.map(base.filter).getOrElse(base)
     if (columns.isEmpty) filtered else filtered.select(columns.map(c => col(s"`$c`")): _*)
   }
@@ -276,6 +284,100 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
   def schema: StructType = read().schema
   def nRows: Long = read().count()
   def nColumns: Int = schema.fields.length
+
+  // ---- schema resolution ------------------------------------------------
+  //
+  // Spark answers `mergeSchema` with a schema-merge JOB over every footer,
+  // and runs it again for every scan. Part files are immutable and
+  // UUID-named, so a footer read once stays valid for its (path, length,
+  // mtime): flat-layout scans take their schema from footers cached here,
+  // merged on the driver in Spark's own order, and run no job for it.
+
+  /** Footers read so far, keyed by (path, length, mtime). Every whole-table
+    * resolve prunes it to the files still listed.
+    */
+  private val footers = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Footer]()
+
+  /** The single reader of table files: `paths` (the table dir, or files) with
+    * `mergeSchema` semantics. When [[footerFiles]] accepts the scan, the
+    * schema comes from [[mergedSchema]]; it is kept only if Spark's file
+    * index lists exactly the files it was merged from (a file landing in
+    * between sends the scan to Spark's inference instead).
+    */
+  private def scan(paths: Seq[String], options: Map[String, String] = Map.empty): DataFrame = {
+    def reader = spark.read.options(Map("mergeSchema" -> "true") ++ options)
+    footerFiles(paths, options)
+      .flatMap { files =>
+        mergedSchema(files, pruneCache = paths == Seq(dir)).map(reader.schema(_).parquet(paths: _*))
+          .filter(df => scannedFiles(df) == files.map(_.getPath.toUri.toString).toSet)
+      }
+      .getOrElse(reader.parquet(paths: _*))
+  }
+
+  private def scannedFiles(df: DataFrame): Set[String] =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelationWithTable(r: HadoopFsRelation, _) => r.location.inputFiles.toSet
+    }.getOrElse(Set.empty)
+
+  /** [[mergedSchema]] of the files a scan of `paths` would read, or None where
+    * Spark's own inference must run (see [[footerFiles]]).
+    */
+  private[sources] def footerSchema(paths: Seq[String],
+                                    options: Map[String, String]): Option[StructType] =
+    footerFiles(paths, options).flatMap(mergedSchema(_, pruneCache = false))
+
+  /** The files a scan of `paths` reads, when their schema is decided by their
+    * footers alone: `*.parquet` files directly under their base path (no
+    * partition directories, summary or foreign files), and no caller option
+    * that changes which files are read or how the schema is inferred. None
+    * otherwise, or when a path is missing (Spark then raises its own error).
+    */
+  private def footerFiles(paths: Seq[String], options: Map[String, String]): Option[Seq[FileStatus]] = {
+    val keys = options.keySet.map(_.toLowerCase(java.util.Locale.ROOT))
+    if (keys.exists(ParquetDatabase.InferenceOptions) ||
+        spark.sessionState.conf.isParquetSchemaRespectSummaries) None
+    else {
+      val fsys = fs
+      val base = options.collectFirst {
+        case (k, v) if k.equalsIgnoreCase("basePath") => fsys.makeQualified(new Path(v))
+      }
+      try {
+        val files = paths.flatMap(p => fsys.listStatus(new Path(p)))
+          .filterNot(s => GraftSchemaBridge.hiddenFromScan(s.getPath.getName))
+        Some(files).filter(_.nonEmpty).filter(_.forall(s =>
+          s.isFile && s.getPath.getName.endsWith(".parquet") &&
+            base.forall(_ == s.getPath.getParent)))
+      } catch { case _: java.io.FileNotFoundException => None }
+    }
+  }
+
+  /** What `mergeSchema` inference returns for `files`: each footer converted
+    * as Spark converts it, folded with Spark's merge in path-sorted order
+    * (the order `ParquetUtils` merges in), failing with Spark's error on
+    * incompatible types. Footers not yet cached are read in parallel with
+    * Spark's own footer reader. None when every footer was skipped as
+    * corrupt (`ignoreCorruptFiles`).
+    */
+  private def mergedSchema(files: Seq[FileStatus], pruneCache: Boolean): Option[StructType] = {
+    def key(f: FileStatus) = (f.getPath.toString, f.getLen, f.getModificationTime)
+    val conf = spark.sessionState.conf
+    val cached = files.flatMap(f => Option(footers.get(key(f))).map(key(f) -> _)).toMap
+    val missing = files.filterNot(f => cached.contains(key(f)))
+    val fresh =
+      if (missing.isEmpty) Map.empty
+      else {
+        val byPath = missing.map(f => f.getPath.toString -> key(f)).toMap
+        GraftSchemaBridge.readFooters(hconf, missing, conf.ignoreCorruptFiles)
+          .map(ft => byPath(ft.getFile.toString) -> ft).toMap
+      }
+    fresh.foreach { case (k, ft) => footers.put(k, ft) }
+    if (pruneCache) footers.keySet.retainAll(files.map(key).asJava)
+    val all = cached ++ fresh
+    val converter = new ParquetToSparkSchemaConverter(conf)
+    files.sortBy(_.getPath.toString).flatMap(f => all.get(key(f)))
+      .map(ParquetFileFormat.readSchemaFromFooter(_, converter))
+      .reduceLeftOption(GraftSchemaBridge.merge(_, _, conf.caseSensitiveAnalysis))
+  }
 
   /** Row count from parquet footers when the flat layout exposes them
     * (metadata-only — no data pages); falls back to a count job on
@@ -553,7 +655,7 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
       val touched = (statless.map(_._1) ++ hit).distinct
       val touchedDf =
         if (touched.isEmpty) conformed.limit(0)
-        else spark.read.option("mergeSchema", "true").parquet(touched: _*)
+        else scan(touched)
           .join(conformed.select(col(s"`$keyCol`")), Seq(keyCol), "left_anti")
       // re-range the replacement on the key so the rewritten files keep
       // tight disjoint footer ranges — future patches prune just as well
@@ -577,11 +679,10 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     */
   def deleteWhere(condition: Column): Unit = {
     val expect = Some(entryFingerprint())
-    val base = spark.read.option("mergeSchema", "true").parquet(dir)
     // the hit-scan is an EAGER table read outside the staging write, so a
     // peer's swap landing mid-scan surfaces here, not in stageOrAbort —
     // same retryable-conflict mapping (round-14 stress-drill finding)
-    val hitNames = conflictIfVanished("hit scan")(base.filter(condition)
+    val hitNames = conflictIfVanished("hit scan")(read().filter(condition)
       .select(col("_metadata.file_path")).distinct()
       .collect().map(r => new Path(r.getString(0)).getName).toSet)
     val flat = ParquetStats.listParquetFiles(dir, hconf)
@@ -590,8 +691,7 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     else if (touched.size != hitNames.size) // partitioned subdir layout
       rewriteWith(read().filter(!condition), expected = expect)
     else {
-      val kept = spark.read.option("mergeSchema", "true").parquet(touched: _*)
-        .filter(!condition)
+      val kept = scan(touched).filter(!condition)
       replaceFiles(touched, kept, expected = expect)
     }
   }
@@ -937,7 +1037,7 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     if (small.size <= n) 0 // packing would not reduce the file count
     else {
       val paths = small.map(_.path)
-      val df = spark.read.option("mergeSchema", "true").parquet(paths: _*)
+      val df = scan(paths)
       val shaped =
         if (sortBy.nonEmpty)
           df.repartitionByRange(n, sortBy.map(c => col(s"`$c`")): _*)
@@ -1115,8 +1215,7 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
   def readSnapshot(tag: String): DataFrame = {
     val (live, arch) = resolveSnapshot(tag)
     def part(root: String, rs: Seq[String]) =
-      spark.read.option("mergeSchema", "true").option("basePath", root)
-        .parquet(rs.map(r => s"$root/$r"): _*)
+      scan(rs.map(r => s"$root/$r"), Map("basePath" -> root))
     if (arch.isEmpty) part(dir, live)
     else if (live.isEmpty) part(archiveRoot.toString, arch)
     else part(dir, live).unionByName(part(archiveRoot.toString, arch),
@@ -1234,6 +1333,12 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
 object ParquetDatabase {
 
   val ManifestName = "_graft_manifest"
+
+  /** Read options (lower-cased) that change which files a scan reads or how
+    * its schema is inferred: reads carrying one keep Spark's inference.
+    */
+  private val InferenceOptions = Set("mergeschema", "pathglobfilter", "recursivefilelookup",
+    "modifiedbefore", "modifiedafter", "ignorecorruptfiles")
 
   /** Named failure for a replica whose bytes don't match its manifest. */
   final class ReplicaIntegrityException(msg: String)

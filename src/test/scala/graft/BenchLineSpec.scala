@@ -16,6 +16,14 @@ import scala.jdk.CollectionConverters._
   */
 class BenchLineSpec extends AnyFunSuite {
 
+  test("quiet-host rule scales with the host: start 1-min load below nproc/2") {
+    assert(Bench.loadOk(1.9, nproc = 4))
+    assert(!Bench.loadOk(2.0, nproc = 4))
+    assert(!Bench.loadOk(3.5, nproc = 4)) // a loaded 4-core host is not quiet
+    assert(Bench.loadOk(3.5, nproc = 32))
+    assert(Bench.loadOk(-1.0, nproc = 4)) // no /proc/loadavg: not diagnosable, passes
+  }
+
   test("front-coding round-trips the real declared-query inventory") {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val entries = names.zipWithIndex.map { case (n, i) => n -> (i.toLong * 37 - 500) }

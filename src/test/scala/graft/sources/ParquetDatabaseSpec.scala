@@ -1,7 +1,10 @@
 package graft.sources
 
 import graft.SparkSpec
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
 
 class ParquetDatabaseSpec extends SparkSpec {
   import spark.implicits._
@@ -589,5 +592,111 @@ class ParquetDatabaseSpec extends SparkSpec {
     assert(after.size >= 4)
     assert(after.forall(_.fileBytes <= target * 2), // footer+dict overhead headroom
       s"files ${after.map(_.fileBytes)} vs target $target")
+  }
+
+  /** `f`'s result and the Spark jobs it starts on this thread (tagged with a
+    * fresh job group, so jobs of other threads never count).
+    */
+  private def withJobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    val out =
+      try f
+      finally {
+        sc.clearJobGroup()
+        ListenerBusDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+    (out, n.get)
+  }
+
+  private def mergeInferred(paths: String*) =
+    spark.read.option("mergeSchema", "true").parquet(paths: _*)
+
+  test("flat read() resolves Spark's mergeSchema result from footers, with no job") {
+    val db = freshDb("parity")
+    val unit = new MetadataBuilder().putString("unit", "eV").build()
+    // batch 1: nested struct s{a}
+    db.create(Seq((1L, 10, "a")).toDF("id", "a", "x")
+      .select(col("id"), struct(col("a")).as("s"), col("x")))
+    // batch 2: s gains a field, a new top-level column carrying field
+    // metadata (only this batch has it, so it survives any merge order), x missing
+    db.create(Seq((2L, 20, 2.5, true)).toDF("id", "a", "b", "flag")
+      .select(col("id"), struct(col("a"), col("b")).as("s"), col("flag").as("flag", unit)))
+    // batch 3: a list column first, s missing, non-nullable literal column
+    db.create(Seq((3L, "c", Seq(1.0, 2.0))).toDF("id", "x", "v")
+      .select(col("v"), col("id"), col("x"), lit(7).as("k")))
+    val want = mergeInferred(db.dir)
+    val fresh = new ParquetDatabase(spark, db.dir) // nothing cached yet
+    val (got, jobs) = withJobs(fresh.read())
+    assert(jobs === 0)
+    // StructType equality covers field order, types, nullability, metadata
+    assert(got.schema === want.schema)
+    assert(got.schema("flag").metadata.getString("unit") === "eV")
+    assert(got.orderBy("id").collect().toSeq === want.orderBy("id").collect().toSeq)
+    // a second read reuses the cached footers and still agrees
+    assert(fresh.read().schema === want.schema)
+  }
+
+  test("incompatible column types still fail read() with Spark's merge error") {
+    val db = freshDb("incompat")
+    db.create(Seq((1L, 1)).toDF("id", "v"))
+    db.create(Seq((2L, "two")).toDF("id", "v"))
+    def failure(f: => Any) = intercept[org.apache.spark.SparkException](f)
+    val want = failure(mergeInferred(db.dir))
+    val got = failure(db.read())
+    assert(want.getCondition === "CANNOT_MERGE_SCHEMAS")
+    assert(got.getCondition === want.getCondition)
+    assert(got.getMessage === want.getMessage)
+  }
+
+  test("readSnapshot over live + archive files keeps its schema and rows") {
+    val db = freshDbClean("snap_mixed")
+    db.create(Seq((1L, "a"), (2L, "b")).toDF("id", "x").repartition(1))
+    db.create(Seq((3L, 3.5, 7)).toDF("id", "y", "n")
+      .select(col("id"), col("y"), struct(col("n")).as("s")).repartition(1))
+    db.snapshot("s")
+    db.deleteWhere(col("id") === 1L) // rewrites batch 1's file, archiving the pinned original
+    val (live, arch) = db.resolveSnapshot("s")
+    assert(live.nonEmpty && arch.nonEmpty, "fixture: the snapshot must span live + archive")
+    // reference: Spark's inference per root, unioned the way readSnapshot unions
+    def part(root: String, rs: Seq[String]) =
+      spark.read.option("mergeSchema", "true").option("basePath", root)
+        .parquet(rs.map(r => s"$root/$r"): _*)
+    val want = part(db.dir, live)
+      .unionByName(part(db.archiveRoot.toString, arch), allowMissingColumns = true)
+    val (got, jobs) = withJobs(db.readSnapshot("s"))
+    assert(jobs === 0)
+    assert(got.schema === want.schema)
+    assert(got.orderBy("id").collect().toSeq === want.orderBy("id").collect().toSeq)
+    assert(got.count() === 3L)
+    // the graft-snapshot source merges the same pinned files in one table
+    val files = live.map(r => s"${db.dir}/$r") ++ arch.map(r => s"${db.archiveRoot}/$r")
+    val (src, srcJobs) =
+      withJobs(spark.read.format("graft-snapshot").option("snapshot", "s").load(db.dir))
+    assert(srcJobs === 0)
+    assert(src.schema === mergeInferred(files: _*).schema)
+    assert(src.orderBy("id").collect().toSeq ===
+      mergeInferred(files: _*).orderBy("id").collect().toSeq)
+  }
+
+  test("a filtered read of a flat table runs exactly one job") {
+    val db = freshDb("onejob")
+    db.create(Seq((1L, "a")).toDF("id", "x"))
+    db.create(Seq((2L, 2.5)).toDF("id", "y"))
+    val fresh = new ParquetDatabase(spark, db.dir)
+    val (rows, jobs) = withJobs(fresh.read(Seq("id", "y"), Some(col("id") === 2L)).collect())
+    assert(jobs === 1)
+    assert(rows.map(r => (r.getLong(0), r.getDouble(1))).toSeq === Seq((2L, 2.5)))
+    // footers now cached: still the one scan job
+    assert(withJobs(fresh.read(Seq("id"), Some(col("id") === 1L)).collect())._2 === 1)
   }
 }
